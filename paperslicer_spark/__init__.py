@@ -9,7 +9,7 @@ capabilities of Tuminha/PaperSlicer (reference snapshot at
   tool string, ts timestamp)`` whose ``text`` payloads carry TEI-like
   XML document markup split across turns;
 - the reference's GROBID HTTP round-trip is replaced by in-executor,
-  Arrow-batched DOM-lite parsing (``mapInPandas``);
+  Arrow-batched DOM-lite parsing (``mapInArrow``);
 - all assembly/aggregation is expressed as DataFrame ops with explicit
   position keys so results are deterministic under parallel execution;
 - designed for 10^12-turn scale: salted repartitioning on ``conv_id``,

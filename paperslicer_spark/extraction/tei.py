@@ -7,7 +7,7 @@ by golden tests (``tests/test_tei_parser.py``) that compare against
 output frozen from the reference module itself.
 
 This module is pure Python and batch-friendly: it is invoked from an
-Arrow-batched ``mapInPandas`` stage (see ``operators/extract.py``),
+Arrow-batched ``mapInArrow`` stage (see ``operators/extract.py``),
 never per-row from the driver. lxml is intentionally not used —
 ``ElementTree.itertext()`` has identical semantics for well-formed
 XML, and stdlib keeps executor Python workers dependency-free.
@@ -106,7 +106,7 @@ class _Doc:
     sees the identical document."""
 
     __slots__ = ("root", "_parent", "_order", "_pb_pos", "_pb_page",
-                 "_zones", "_has_pb", "_zone_surface")
+                 "_has_pb", "_zone_surface")
 
     def __init__(self, root: ET.Element):
         self.root = root
@@ -114,7 +114,6 @@ class _Doc:
         self._order: Optional[Dict[int, int]] = None
         self._pb_pos: Optional[List[int]] = None
         self._pb_page: Optional[List[Optional[int]]] = None
-        self._zones: Optional[Dict[str, ET.Element]] = None
         self._has_pb: Optional[bool] = None
         self._zone_surface: Optional[
             Dict[str, tuple[ET.Element, ET.Element]]] = None
@@ -168,16 +167,6 @@ class _Doc:
         if k < 0:
             return None
         return self._pb_page[k]
-
-    def zone(self, zone_id: str) -> Optional[ET.Element]:
-        if self._zones is None:
-            zs: Dict[str, ET.Element] = {}
-            for z in self.root.iter(T_ZONE):
-                zid = z.get(XML_ID)
-                if zid:
-                    zs.setdefault(zid, z)
-            self._zones = zs
-        return self._zones.get(zone_id)
 
     def zone_in_parent(self, zone_id: str
                        ) -> Optional[tuple[ET.Element,

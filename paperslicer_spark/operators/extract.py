@@ -1,10 +1,27 @@
-"""Document extraction: fused Arrow-batched parse UDF + exploded views.
+"""Document extraction: one Arrow-batched parse core + exploded views.
 
 This is the Spark-side replacement for the reference's per-PDF loop
-(``project.py:174-192`` → ``pipeline.process``): ONE ``mapInPandas``
+(``project.py:174-192`` → ``pipeline.process``): ONE ``mapInArrow``
 stage runs the whole record assembly (DOM-lite parse + table merge +
 review profile) per document, so there is exactly one
 JVM↔Python/Arrow boundary on the hot path (SURVEY.md §4.6).
+
+The four entry points are compositions of one core (``_extract``):
+
+- ``parse_documents``: assembled docs → nested records;
+- ``parse_turns_fused``: raw turns → nested records;
+- ``extract_sections_direct``: assembled docs → flat sections rows;
+- ``extract_sections_fused``: raw turns → flat sections rows.
+
+Each piece of the core is written once:
+
+- input shape: ``_doc_shape`` reads ``(conv_id, payload)`` rows;
+  ``_turn_shape`` repartitions/sorts raw turns and assembles each
+  conversation inside the UDF (no payload shuffle);
+- ``_build_row``: the only place a document is parsed;
+- output projection: ``_record_rows`` or ``_section_rows``;
+- ``arrow_batches``: the column-wise ``pa.RecordBatch`` builder, shared
+  with ``spans.extract_turn_spans``.
 
 Error model mirrors the reference's per-document try/except
 (``project.py:57-62``): failures become ``status='error'`` rows, never
@@ -14,6 +31,7 @@ kill a stage.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -34,104 +52,126 @@ RECORD_SCHEMA = (
     "references array<struct<index:int,text:string,id:string,title:string,doi:string,year:string,authors:array<string>>>"
 )
 
-_EMPTY = {
-    "title": None, "journal": None, "doi": None, "authors": [],
-    "keywords": [], "sections": {}, "other_sections": [],
-    "figures": [], "tables": [], "references": [],
-}
+SECTIONS_SCHEMA = (
+    "conv_id string, section_label string, clean_text string, "
+    "is_canonical boolean"
+)
 
+# Marker label for error-document rows from the sections-only paths
+# (emit_errors=True): at corpus scale "the sections output is silently
+# smaller than the corpus" is an operational trap — the marker row
+# keeps per-document accounting possible on the minimal-bytes path.
+ERROR_SECTION_LABEL = "__error__"
 
-def _flatten(conv_id: str, rec: dict) -> dict:
-    meta = rec.get("meta") or {}
-    return {
-        "conv_id": conv_id,
-        "status": "ok",
-        "error": None,
-        "title": meta.get("title"),
-        "journal": meta.get("journal"),
-        "doi": meta.get("doi"),
-        "authors": [
-            {"name": a.get("name"), "affiliation": a.get("affiliation")}
-            for a in (meta.get("authors") or [])
-        ],
-        "keywords": list(meta.get("keywords") or []),
-        "sections": dict(rec.get("sections") or {}),
-        "other_sections": [
-            {"head": h, "text": t}
-            for h, t in (rec.get("other_sections") or {}).items()
-        ],
-        "figures": [
-            {"label": f.get("label"), "caption": f.get("caption"),
-             "path": f.get("path"), "source": f.get("source"),
-             "coords": f.get("coords")}
-            for f in (rec.get("figures") or [])
-        ],
-        "tables": [
-            {"label": t.get("label"), "caption": t.get("caption"),
-             "path": t.get("path"), "source": t.get("source"),
-             "coords": t.get("coords")}
-            for t in (rec.get("tables") or [])
-        ],
-        "references": [
-            {"index": r.get("index"), "text": r.get("text"),
-             "id": r.get("id"), "title": r.get("title"),
-             "doi": r.get("doi"), "year": r.get("year"),
-             "authors": list(r.get("authors") or [])}
-            for r in (rec.get("references") or [])
-        ],
-    }
-
-
-_COLS = ["conv_id", "status", "error", "title", "journal", "doi",
-         "authors", "keywords", "sections", "other_sections",
-         "figures", "tables", "references"]
-
-# "no conversation open yet" sentinel for the fused group-detection
-# loops. It must be distinct from None: the agg path's groupBy keeps a
-# NULL conv_id as a real group, so a genuine null key has to open and
-# close a group here too — `state["conv"] is None` would silently drop
-# every null-keyed turn (None != None is False, the group never opens).
+# "no conversation open yet" sentinel for the turn-group loop. It must
+# be distinct from None: the agg path's groupBy keeps a NULL conv_id as
+# a real group, so a genuine null key has to open and close a group
+# here too — `conv is None` would silently drop every null-keyed turn
+# (None != None is False, the group never opens).
 _UNSET = object()
 
 
-def _build_row(conv_id: str, payload: str, merge_tables: bool,
-               review_mode: Optional[bool]) -> dict:
-    """Parse one assembled payload → flat record row (error-row model)."""
+def arrow_schema(ddl: str):
+    """Spark DDL → the ``pa.Schema`` a ``mapInArrow`` UDF must emit
+    (resolved on the driver: DDL parsing needs the JVM)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
+def arrow_batches(rows, schema, flush_rows: int) -> Iterator["pa.RecordBatch"]:
+    """Row tuples → ``pa.RecordBatch``es of ``flush_rows`` rows (the
+    last may be shorter), built column-wise: one C-level ``zip(*rows)``
+    transpose and one ``pa.array`` per column. Pandas-DataFrame
+    construction + coercion measured ~5× dearer per batch, per-row
+    dicts ~10× dearer still."""
+    import pyarrow as pa
+
+    def build(buf):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(col, f.type) for col, f in zip(zip(*buf), schema)],
+            schema=schema)
+
+    buf: list = []
+    for row in rows:
+        buf.append(row)
+        if len(buf) >= flush_rows:
+            yield build(buf)
+            buf = []
+    if buf:
+        yield build(buf)
+
+
+def _build_row(conv_id, payload: Optional[str], error: Optional[str],
+               merge_tables: bool, review_mode: Optional[bool]):
+    """Parse one assembled payload → ``(record, None)``; or ``(None,
+    error)`` when the parse raised or the input shape already failed
+    the document (``error`` given)."""
+    if error is not None:
+        return None, error
     try:
         rec = parse_tei(payload, source_path=conv_id)
         if merge_tables:
             merge_table_entries(rec)
         if review_mode is True or (review_mode is None and should_apply(rec)):
             apply_review(rec)
-        return _flatten(conv_id, rec)
+        return rec, None
     except Exception as e:  # noqa: BLE001 — error-row model
-        row = dict(_EMPTY)
-        row.update(conv_id=conv_id, status="error",
-                   error=f"{type(e).__name__}: {e}")
-        return row
+        return None, f"{type(e).__name__}: {e}"
 
 
-def parse_documents(docs: DataFrame, merge_tables: bool = True,
-                    review_mode: Optional[bool] = None) -> DataFrame:
-    """``(conv_id, payload)`` → typed record rows.
+def _media(items) -> list:
+    return [(m.get("label"), m.get("caption"), m.get("path"),
+             m.get("source"), m.get("coords")) for m in items or []]
 
-    ``review_mode``: True forces the review profile, False disables it,
-    None applies the reference heuristic (``journals/review.py:10-20``).
-    """
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+def _record_rows(conv_id, rec: Optional[dict], error: Optional[str]) -> list:
+    """Nested-record projection: one ``RECORD_SCHEMA`` row per document
+    (structs as field-ordered tuples)."""
+    if rec is None:
+        return [(conv_id, "error", error, None, None, None,
+                 [], [], {}, [], [], [], [])]
+    meta = rec.get("meta") or {}
+    return [(
+        conv_id, "ok", None,
+        meta.get("title"), meta.get("journal"), meta.get("doi"),
+        [(a.get("name"), a.get("affiliation"))
+         for a in meta.get("authors") or []],
+        list(meta.get("keywords") or []),
+        rec.get("sections") or {},
+        list((rec.get("other_sections") or {}).items()),
+        _media(rec.get("figures")),
+        _media(rec.get("tables")),
+        [(r.get("index"), r.get("text"), r.get("id"), r.get("title"),
+          r.get("doi"), r.get("year"), list(r.get("authors") or []))
+         for r in rec.get("references") or []],
+    )]
 
-        for pdf in batches:
-            cols: dict = {c: [] for c in _COLS}
-            for conv_id, payload in zip(pdf["conv_id"].tolist(),
-                                        pdf["payload"].tolist()):
-                row = _build_row(conv_id, payload, merge_tables, review_mode)
-                for c in _COLS:
-                    cols[c].append(row[c])
-            yield pd.DataFrame(cols)
 
-    return docs.mapInPandas(run, schema=RECORD_SCHEMA)
+def _section_rows(conv_id, rec: Optional[dict], error: Optional[str],
+                  emit_errors: bool) -> list:
+    """Flat sections projection: canonical sections then other
+    sections; an error document yields nothing, or one
+    ``ERROR_SECTION_LABEL`` row carrying the error with ``emit_errors``."""
+    if rec is None:
+        return [(conv_id, ERROR_SECTION_LABEL, error, False)] \
+            if emit_errors else []
+    return ([(conv_id, k, v, True) for k, v in rec["sections"].items()]
+            + [(conv_id, k, v, False)
+               for k, v in rec["other_sections"].items()])
+
+
+def _doc_shape(docs: DataFrame):
+    """Assembled ``(conv_id, payload)`` rows → (relation, doc reader)."""
+
+    def read(batches):
+        for batch in batches:
+            for conv_id, payload in zip(batch.column(0).to_pylist(),
+                                        batch.column(1).to_pylist()):
+                yield conv_id, payload, None
+
+    return docs.select("conv_id", "payload"), read
 
 
 def _fused_partitions(t: DataFrame, partitions: Optional[int]) -> int:
@@ -146,6 +186,75 @@ def _fused_partitions(t: DataFrame, partitions: Optional[int]) -> int:
     except Exception:  # non-scan sources where planning the RDD is costly
         src_parts = 0
     return max(t.sparkSession.sparkContext.defaultParallelism * 2, src_parts)
+
+
+def _turn_shape(turns: DataFrame, conv_aligned: bool,
+                partitions: Optional[int],
+                max_turns_per_conv: Optional[int]):
+    """Raw turns → (relation, conversation grouper). The only shuffle
+    is a hash repartition of raw turn rows on ``conv_id`` (none with
+    ``conv_aligned``); rows are sorted within partitions, so each
+    conversation is one contiguous run that the grouper assembles —
+    carried across input batches — into one payload."""
+    t = turns.select("conv_id", "turn_idx", "text")
+    if not conv_aligned:
+        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
+    # text tiebreak mirrors array_sort(struct(pos,text)) in the agg path
+    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
+
+    def read(batches):
+        from paperslicer_spark.sources.transcripts import assemble_payload
+
+        def close(conv, frags, over):
+            if over:
+                return conv, None, f"oversized: > {max_turns_per_conv} turns"
+            return conv, assemble_payload(frags), None
+
+        conv, frags, over = _UNSET, [], False
+        for batch in batches:
+            for conv_id, text in zip(batch.column(0).to_pylist(),
+                                     batch.column(2).to_pylist()):
+                if conv_id != conv:
+                    if conv is not _UNSET:
+                        yield close(conv, frags, over)
+                    conv, frags, over = conv_id, [], False
+                if over:
+                    continue  # oversized: drop fragments, never buffer
+                if text:  # null/empty fragments skipped (agg-path parity)
+                    frags.append(text)
+                    if max_turns_per_conv and len(frags) > max_turns_per_conv:
+                        over, frags = True, []
+        if conv is not _UNSET:
+            yield close(conv, frags, over)
+
+    return t, read
+
+
+def _extract(shape, project, schema: str, flush_rows: int,
+             merge_tables: bool, review_mode: Optional[bool]) -> DataFrame:
+    """The core: input shape → ``_build_row`` → projection → Arrow
+    batches, as ONE ``mapInArrow`` over the shape's relation."""
+    rel, read = shape
+    pa_schema = arrow_schema(schema)
+
+    def run(batches):
+        rows = (row for conv_id, payload, error in read(batches)
+                for row in project(conv_id, *_build_row(
+                    conv_id, payload, error, merge_tables, review_mode)))
+        return arrow_batches(rows, pa_schema, flush_rows)
+
+    return rel.mapInArrow(run, schema=schema)
+
+
+def parse_documents(docs: DataFrame, merge_tables: bool = True,
+                    review_mode: Optional[bool] = None) -> DataFrame:
+    """``(conv_id, payload)`` → typed record rows.
+
+    ``review_mode``: True forces the review profile, False disables it,
+    None applies the reference heuristic (``journals/review.py:10-20``).
+    """
+    return _extract(_doc_shape(docs), _record_rows, RECORD_SCHEMA, 512,
+                    merge_tables, review_mode)
 
 
 def check_conv_alignment(turns: DataFrame) -> int:
@@ -182,8 +291,9 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
     shuffle is a plain hash ``repartition`` of RAW turn rows on
     ``conv_id`` — no aggregation state, no big-array sort — rows are
     sorted within partitions, and per-conversation assembly happens
-    INSIDE the same ``mapInPandas`` that parses: turn bytes cross the
+    INSIDE the same ``mapInArrow`` that parses: turn bytes cross the
     JVM↔Python boundary exactly once, compact records come back.
+    ``batch_rows`` is the output batch size in records.
 
     ``conv_aligned=True`` additionally skips the repartition for
     sources whose layout guarantees a conversation never straddles
@@ -201,7 +311,7 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
     splitting disabled (checkpoint.py DDL notes the same). Cheap
     runtime guard when doc count is known: assert output record count
     == conversation count (bench_scaling.py does exactly this); or
-    run ``check_conv_alignment`` below on a new layout once.
+    run ``check_conv_alignment`` above on a new layout once.
 
     Long-conversation skew: a 1000× conversation is one Python group
     inside one task (bounded by its own payload size), never a hot
@@ -213,79 +323,9 @@ def parse_turns_fused(turns: DataFrame, merge_tables: bool = True,
     dropped as they stream in, so a 1 GB outlier never buffers), never
     a task OOM.
     """
-    t = turns.select("conv_id", "turn_idx", "text")
-    if not conv_aligned:
-        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
-    # text tiebreak mirrors array_sort(struct(pos,text)) in the agg path
-    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-        from paperslicer_spark.sources.transcripts import assemble_payload
-
-        cols: dict = {c: [] for c in _COLS}
-        state = {"n": 0, "conv": _UNSET, "frags": [], "over": False}
-
-        def close_conv():
-            if state["over"]:
-                row = dict(_EMPTY)
-                row.update(conv_id=state["conv"], status="error",
-                           error=f"oversized: > {max_turns_per_conv} turns")
-            else:
-                row = _build_row(state["conv"],
-                                 assemble_payload(state["frags"]),
-                                 merge_tables, review_mode)
-            for c in _COLS:
-                cols[c].append(row[c])
-            state["n"] += 1
-
-        for pdf in batches:
-            for conv_id, text in zip(pdf["conv_id"].tolist(),
-                                     pdf["text"].tolist()):
-                if conv_id != state["conv"]:
-                    if state["conv"] is not _UNSET:
-                        close_conv()
-                    state["conv"], state["frags"] = conv_id, []
-                    state["over"] = False
-                if state["over"]:
-                    continue  # oversized: drop fragments, never buffer
-                if text:  # null/empty fragments skipped (agg-path parity)
-                    state["frags"].append(text)
-                    if (max_turns_per_conv
-                            and len(state["frags"]) > max_turns_per_conv):
-                        state["over"], state["frags"] = True, []
-            if state["n"] >= batch_rows:
-                yield pd.DataFrame(cols)
-                for c in _COLS:
-                    cols[c] = []
-                state["n"] = 0
-        if state["conv"] is not _UNSET:
-            close_conv()
-        if state["n"]:
-            yield pd.DataFrame(cols)
-
-    return t.mapInPandas(run, schema=RECORD_SCHEMA)
-
-
-SECTIONS_SCHEMA = (
-    "conv_id string, section_label string, clean_text string, "
-    "is_canonical boolean"
-)
-
-
-def _sections_pa_schema():
-    import pyarrow as pa
-    return pa.schema([
-        ("conv_id", pa.string()), ("section_label", pa.string()),
-        ("clean_text", pa.string()), ("is_canonical", pa.bool_()),
-    ])
-
-
-# Marker label for error-document rows from the sections-only paths
-# (emit_errors=True): at corpus scale "the sections output is silently
-# smaller than the corpus" is an operational trap — the marker row
-# keeps per-document accounting possible on the minimal-bytes path.
-ERROR_SECTION_LABEL = "__error__"
+    return _extract(
+        _turn_shape(turns, conv_aligned, partitions, max_turns_per_conv),
+        _record_rows, RECORD_SCHEMA, batch_rows, merge_tables, review_mode)
 
 
 def extract_sections_direct(docs: DataFrame, merge_tables: bool = True,
@@ -305,48 +345,9 @@ def extract_sections_direct(docs: DataFrame, merge_tables: bool = True,
     path; the default False keeps exact row parity with
     ``sections_long(parse_documents(...))``, which drops error docs.
     """
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        pa_schema = _sections_pa_schema()
-        for batch in batches:
-            conv_ids, labels, texts, canon = [], [], [], []
-            for conv_id, payload in zip(batch.column(0).to_pandas().tolist(),
-                                        batch.column(1).to_pandas().tolist()):
-                try:
-                    rec = parse_tei(payload, source_path=conv_id)
-                    if merge_tables:
-                        merge_table_entries(rec)
-                    if review_mode is True or (review_mode is None
-                                               and should_apply(rec)):
-                        apply_review(rec)
-                except Exception as e:  # noqa: BLE001 — error-row model
-                    if emit_errors:
-                        conv_ids.append(conv_id)
-                        labels.append(ERROR_SECTION_LABEL)
-                        texts.append(f"{type(e).__name__}: {e}")
-                        canon.append(False)
-                    continue
-                for k, v in rec["sections"].items():
-                    conv_ids.append(conv_id)
-                    labels.append(k)
-                    texts.append(v)
-                    canon.append(True)
-                for k, v in rec["other_sections"].items():
-                    conv_ids.append(conv_id)
-                    labels.append(k)
-                    texts.append(v)
-                    canon.append(False)
-            yield pa.RecordBatch.from_arrays([
-                pa.array(conv_ids, pa.string()),
-                pa.array(labels, pa.string()),
-                pa.array(texts, pa.string()),
-                pa.array(canon, pa.bool_()),
-            ], schema=pa_schema)
-
-    return docs.select("conv_id", "payload").mapInArrow(
-        run, schema=SECTIONS_SCHEMA)
+    return _extract(_doc_shape(docs),
+                    partial(_section_rows, emit_errors=emit_errors),
+                    SECTIONS_SCHEMA, 4096, merge_tables, review_mode)
 
 
 def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
@@ -356,7 +357,7 @@ def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
                            max_turns_per_conv: Optional[int] = None,
                            emit_errors: bool = False) -> DataFrame:
     """Sections-only fused variant: assembly + parse + explode all
-    inside ONE ``mapInPandas`` over (optionally repartitioned) raw
+    inside ONE ``mapInArrow`` over (optionally repartitioned) raw
     turns — the minimal-bytes path when downstream needs only sections
     (the common 100 TB case): only flat section strings ever cross the
     Arrow boundary, no nested meta/media/reference structs.
@@ -365,88 +366,15 @@ def extract_sections_fused(turns: DataFrame, merge_tables: bool = True,
     ``emit_errors=True`` adds a ``'__error__'`` marker row per failed
     document for corpus-size accounting).
 
-    ``max_turns_per_conv`` is the same worker-memory guardrail as
-    ``parse_turns_fused``: a conversation exceeding it stops buffering
-    immediately (fragments are dropped as they stream in, so a 1 GB
-    adversarial conversation never accumulates in ``frags``) and
-    yields no section rows — or the error marker with
-    ``emit_errors=True`` — never a task OOM.
-
-    ``conv_aligned=True`` has the same layout contract as
-    ``parse_turns_fused`` — see its docstring for the file-split
-    caveat (bucket files must not be split across tasks)."""
-    t = turns.select("conv_id", "turn_idx", "text")
-    if not conv_aligned:
-        t = t.repartition(_fused_partitions(t, partitions), "conv_id")
-    t = t.sortWithinPartitions("conv_id", "turn_idx", "text")
-
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        from paperslicer_spark.sources.transcripts import assemble_payload
-
-        out = {"conv_id": [], "section_label": [], "clean_text": [],
-               "is_canonical": []}
-        state = {"conv": _UNSET, "frags": [], "over": False}
-
-        def emit(label, text, canon):
-            out["conv_id"].append(state["conv"])
-            out["section_label"].append(label)
-            out["clean_text"].append(text)
-            out["is_canonical"].append(canon)
-
-        def close_conv():
-            if state["over"]:
-                if emit_errors:
-                    emit(ERROR_SECTION_LABEL,
-                         f"oversized: > {max_turns_per_conv} turns", False)
-                return
-            row = _build_row(state["conv"], assemble_payload(state["frags"]),
-                             merge_tables, review_mode)
-            if row["status"] == "error":
-                if emit_errors:
-                    emit(ERROR_SECTION_LABEL, row["error"], False)
-                return
-            for k, v in row["sections"].items():
-                emit(k, v, True)
-            for os_ in row["other_sections"]:
-                emit(os_["head"], os_["text"], False)
-
-        pa_schema = _sections_pa_schema()
-
-        def flush():
-            rb = pa.RecordBatch.from_arrays([
-                pa.array(out["conv_id"], pa.string()),
-                pa.array(out["section_label"], pa.string()),
-                pa.array(out["clean_text"], pa.string()),
-                pa.array(out["is_canonical"], pa.bool_()),
-            ], schema=pa_schema)
-            for k in out:
-                out[k] = []
-            return rb
-
-        for batch in batches:
-            for conv_id, text in zip(batch.column(0).to_pandas().tolist(),
-                                     batch.column(2).to_pandas().tolist()):
-                if conv_id != state["conv"]:
-                    if state["conv"] is not _UNSET:
-                        close_conv()
-                    state["conv"], state["frags"] = conv_id, []
-                    state["over"] = False
-                if state["over"]:
-                    continue  # oversized: drop fragments, never buffer
-                if text:
-                    state["frags"].append(text)
-                    if (max_turns_per_conv
-                            and len(state["frags"]) > max_turns_per_conv):
-                        state["over"], state["frags"] = True, []
-            if len(out["conv_id"]) >= 4096:
-                yield flush()
-        if state["conv"] is not _UNSET:
-            close_conv()
-        if out["conv_id"]:
-            yield flush()
-
-    return t.mapInArrow(run, schema=SECTIONS_SCHEMA)
+    ``max_turns_per_conv``, ``conv_aligned`` and ``partitions`` mean
+    what they mean for ``parse_turns_fused`` (an oversized
+    conversation yields no section rows, or the error marker with
+    ``emit_errors=True``) — see its docstring for the file-split
+    caveat of ``conv_aligned``."""
+    return _extract(
+        _turn_shape(turns, conv_aligned, partitions, max_turns_per_conv),
+        partial(_section_rows, emit_errors=emit_errors),
+        SECTIONS_SCHEMA, 4096, merge_tables, review_mode)
 
 
 def sections_long(records: DataFrame) -> DataFrame:

@@ -14,7 +14,7 @@ Covers the Spark-expressible parts of the reference's media layer:
   inspections (blank/low-ink) need rasterization (PyMuPDF absent) and
   are documented out of scope.
 - §2.10: the strategy cascade's priority ordering as a rank over
-  source tags; K5's CSV summary sink.
+  source tags.
 """
 
 from __future__ import annotations
@@ -90,15 +90,3 @@ def filter_media(media: DataFrame, banner_aspect: float = 5.0) -> DataFrame:
         )
         .drop("_prio_rank", "coords_t")
     )
-
-
-def media_csv_rows(media: DataFrame) -> DataFrame:
-    """K5 (``scripts/export_media.py:101-137``): flat CSV summary rows
-    ``(conv_id, kind, label, caption, path, source)``."""
-    return media.select("conv_id", "kind", "label", "caption", "path",
-                        "source")
-
-
-def write_media_csv(media: DataFrame, path: str) -> None:
-    media_csv_rows(media).write.mode("overwrite").option(
-        "header", True).csv(path)

@@ -3,7 +3,7 @@
 The north metric is turns/sec with per-turn text+span equality
 (BASELINE.json). This stage is a pure map (no shuffle): each turn's
 balanced XML fragment is parsed in-executor (stdlib ElementTree inside
-one Arrow-batched ``mapInPandas``), producing
+one ``mapInArrow``), producing
 
 - the turn's cleaned text (reference P1 semantics: Python
   ``str.split()`` whitespace collapse — ``parser.py:12-13``), and
@@ -22,7 +22,7 @@ maxRecordsPerBatch`` (multi-KB payload strings — see session.py).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List
 
 from xml.etree import ElementTree as ET
 
@@ -32,15 +32,11 @@ from paperslicer_spark.extraction.tei import (
     T, T_AB, T_DIV, T_FIGDESC, T_FIGURE, T_HEAD, T_P, T_TABLE, _P_AB,
     normalize_space, _txt)
 from paperslicer_spark.functions.sections import canonical_section_name
+from paperslicer_spark.operators.extract import arrow_batches, arrow_schema
 
 SPAN_SCHEMA = (
     "conv_id string, turn_idx int, unit_idx int, kind string, "
     "section_label string, char_start int, char_end int, clean_text string"
-)
-
-CLEAN_SCHEMA = (
-    "conv_id string, turn_idx int, clean_text string, n_units int, "
-    "parse_ok boolean"
 )
 
 _WRAP_OPEN = '<w xmlns="http://www.tei-c.org/ns/1.0">'
@@ -116,86 +112,33 @@ def turn_units(fragment: str) -> tuple[str, List[dict], bool]:
     return clean, units, True
 
 
+def _span_rows(batches):
+    """Arrow batches of ``(conv_id, turn_idx, text)`` → span row tuples
+    (a NULL turn yields none)."""
+    for batch in batches:
+        for conv_id, turn_idx, text in zip(
+                *(col.to_pylist() for col in batch.columns)):
+            if text is None:
+                continue
+            _, units, _ = turn_units(text)
+            for i, u in enumerate(units):
+                yield (conv_id, turn_idx, i, u["kind"], u["section_label"],
+                       u["char_start"], u["char_end"], u["clean_text"])
+
+
 def extract_turn_spans(turns: DataFrame) -> DataFrame:
     """Transcripts → per-unit span rows (map-only, no shuffle).
 
     Arrow-native stage: input is projected to the three columns the
     parse reads (an opaque UDF otherwise defeats column pruning and
     ships every column — guide §4.1), batches arrive as Arrow record
-    batches, and output batches are built column-wise straight into
-    ``pa.RecordBatch.from_arrays`` — measured ~5× cheaper per output
-    batch than pandas-DataFrame construction + from_pandas coercion
-    (and per-row dicts were ~10× slower still).
+    batches, and output batches are built column-wise by the
+    extraction core's ``arrow_batches``.
     """
+    pa_schema = arrow_schema(SPAN_SCHEMA)
 
-    def run(batches) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        out_schema = pa.schema([
-            ("conv_id", pa.string()), ("turn_idx", pa.int32()),
-            ("unit_idx", pa.int32()), ("kind", pa.string()),
-            ("section_label", pa.string()), ("char_start", pa.int32()),
-            ("char_end", pa.int32()), ("clean_text", pa.string()),
-        ])
-        for batch in batches:
-            conv_ids: list = []
-            turn_idxs: list = []
-            unit_idxs: list = []
-            kinds: list = []
-            labels: list = []
-            starts: list = []
-            ends: list = []
-            texts: list = []
-            for conv_id, turn_idx, text in zip(
-                batch.column(0).to_pandas().tolist(),
-                batch.column(1).to_pandas().tolist(),
-                batch.column(2).to_pandas().tolist(),
-            ):
-                if text is None:
-                    continue
-                _, units, _ = turn_units(text)
-                ti = int(turn_idx)
-                for i, u in enumerate(units):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(ti)
-                    unit_idxs.append(i)
-                    kinds.append(u["kind"])
-                    labels.append(u["section_label"])
-                    starts.append(u["char_start"])
-                    ends.append(u["char_end"])
-                    texts.append(u["clean_text"])
-            yield pa.RecordBatch.from_arrays([
-                pa.array(conv_ids, pa.string()),
-                pa.array(turn_idxs, pa.int32()),
-                pa.array(unit_idxs, pa.int32()),
-                pa.array(kinds, pa.string()),
-                pa.array(labels, pa.string()),
-                pa.array(starts, pa.int32()),
-                pa.array(ends, pa.int32()),
-                pa.array(texts, pa.string()),
-            ], schema=out_schema)
+    def run(batches):
+        return arrow_batches(_span_rows(batches), pa_schema, 4096)
 
     return turns.select("conv_id", "turn_idx", "text") \
         .mapInArrow(run, schema=SPAN_SCHEMA)
-
-
-def clean_turns(turns: DataFrame) -> DataFrame:
-    """Per-turn cleaned text (P1) + unit count + parse flag."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            cleans, n_units, oks = [], [], []
-            for text in pdf["text"]:
-                clean, units, ok = turn_units(text or "")
-                cleans.append(clean)
-                n_units.append(len(units))
-                oks.append(ok)
-            yield pd.DataFrame({
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].astype("int32").values,
-                "clean_text": cleans, "n_units": n_units, "parse_ok": oks,
-            })
-
-    return turns.mapInPandas(run, schema=CLEAN_SCHEMA)

@@ -14,19 +14,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_driver_memory() -> str:
+    """About a quarter of the host's MemTotal, capped at 8g. The heap is
+    pre-touched (below), so all of it is resident from startup: a fixed
+    8g on a 15 GB host left the Python workers too little and the
+    kernel OOM-killed the JVM. Floored at 512m (Spark refuses heaps
+    under ~450 MB); 8g when /proc/meminfo is unavailable."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "8g"
+    return f"{max(512, min(8192, kb // 4 // 1024))}m"
+
+
+# one value feeds both -Xms and spark.driver.memory: Xms > Xmx would
+# stop the JVM from starting
+_DRIVER_MEMORY = os.environ.get("SPARK_DRIVER_MEMORY") or _host_driver_memory()
+
 DEFAULT_CONFS = {
     # local[32]: the 1g JVM default GC-thrashes under 32 executor
     # threads, but an oversized heap measurably HURTS on this kernel
     # (longer GC scans + page-zeroing sys time) — 8g is the sweet spot
-    # measured for this workload
-    "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    # measured for this workload, hence the cap
+    "spark.driver.memory": _DRIVER_MEMORY,
     "spark.driver.maxResultSize": "4g",
     # -Xms=-Xmx + pre-touch: dynamic heap growth on this kernel spends
     # whole seconds in page-zeroing system time mid-job (measured: a
     # 32-core run degraded 6s → 110s without it; stable 6s with it)
     "spark.driver.extraJavaOptions": (
-        f"-Xms{os.environ.get('SPARK_DRIVER_MEMORY', '8g')} "
-        "-XX:+AlwaysPreTouch -XX:+UseG1GC"),
+        f"-Xms{_DRIVER_MEMORY} -XX:+AlwaysPreTouch -XX:+UseG1GC"),
     # JVM↔Python Arrow traffic over Unix domain sockets: loopback TCP
     # on this sandbox kernel costs ~0.7 core-sec of system time per MB
     # (measured); UDS cuts it ~3×. Harmless on real clusters.

@@ -10,6 +10,7 @@ Correctness gates:
 """
 
 import json
+import re
 
 import pytest
 
@@ -20,7 +21,7 @@ from paperslicer_spark.operators.extract import (
     media_long,
     references_long,
 )
-from paperslicer_spark.operators.spans import extract_turn_spans, clean_turns
+from paperslicer_spark.operators.spans import extract_turn_spans, turn_units
 from paperslicer_spark.sources.transcripts import (
     assemble_payload,
     build_document,
@@ -150,12 +151,13 @@ def test_error_row_model(spark):
 
 
 def test_span_invariant(spark, turns):
-    s = extract_turn_spans(turns).withColumnRenamed("clean_text", "unit_text")
-    c = clean_turns(turns).withColumnRenamed("clean_text", "turn_text")
-    j = s.join(c, ["conv_id", "turn_idx"]).collect()
-    assert j, "no spans extracted"
-    for r in j:
-        assert r["unit_text"] == r["turn_text"][r["char_start"]:r["char_end"]]
+    turn_text = {(t["conv_id"], t["turn_idx"]): turn_units(t["text"] or "")[0]
+                 for t in turns.select("conv_id", "turn_idx", "text").collect()}
+    spans = extract_turn_spans(turns).collect()
+    assert spans, "no spans extracted"
+    for r in spans:
+        clean = turn_text[(r["conv_id"], r["turn_idx"])]
+        assert r["clean_text"] == clean[r["char_start"]:r["char_end"]]
 
 
 def test_spans_cover_section_content(spark, turns, reference_modules):
@@ -418,3 +420,32 @@ def test_sections_direct_equals_records_path(spark, turns):
                                    review_mode=None, partitions=5)
     c = sorted(map(tuple, fused.collect()))
     assert a == c
+
+
+def test_one_parse_node_per_entry_point(spark, turns):
+    """Each entry point plans exactly ONE Python-UDF node, the core's
+    MapInArrow (parse once per pass); the raw-turns shape adds exactly
+    one Exchange (the conv_id repartition), none when conv-aligned."""
+    from paperslicer_spark.operators.extract import (
+        extract_sections_direct, extract_sections_fused, parse_turns_fused)
+
+    udf = re.compile(r"\b(MapInPandas|MapInArrow|PythonMapInArrow|"
+                     r"BatchEvalPython|ArrowEvalPython)\b")
+    docs = spark.createDataFrame([("c1", "<TEI/>")],
+                                 "conv_id string, payload string")
+    plans = {
+        "parse_documents": (parse_documents(docs), 0),
+        "extract_sections_direct": (extract_sections_direct(docs), 0),
+        "parse_turns_fused": (parse_turns_fused(turns), 1),
+        "extract_sections_fused": (extract_sections_fused(turns), 1),
+        "parse_turns_fused aligned": (
+            parse_turns_fused(turns, conv_aligned=True), 0),
+        "extract_sections_fused aligned": (
+            extract_sections_fused(turns, conv_aligned=True), 0),
+        "extract_turn_spans": (extract_turn_spans(turns), 0),
+    }
+    for name, (df, n_exchange) in plans.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert udf.findall(plan) == ["MapInArrow"], (name, plan)
+        assert len(re.findall(r"\bExchange\b", plan)) == n_exchange, \
+            (name, plan)

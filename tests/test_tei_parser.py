@@ -226,8 +226,8 @@ DUP_ZONE_TEI = """
 
 
 def test_duplicate_zone_id_resolution_parity(reference_modules):
-    # Round-6: zone_in_parent resolves duplicate xml:id zones with the
-    # SAME last-in-document-order winner as the original zones map —
+    # zone_in_parent resolves duplicate xml:id zones first-wins — the
+    # first zone in document order, like the reference's xpath(...)[0] —
     # compare byte-exactly against the reference on a payload where a
     # parent-preorder child scan would pick the other zone.
     ref_parser, _, _ = reference_modules
