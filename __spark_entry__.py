@@ -109,6 +109,28 @@ def _synth_records(spark: SparkSession) -> DataFrame:
     return parse_turns_fused(_synth_turns(spark), partitions=8)
 
 
+def _synth_lines(idx_mod7_inject: bool = True):
+    # deterministic multi-line text from the single-line corpus
+    # (the x34/x40 synthesize-then-operate pattern): 6-token lines;
+    # line (doc_id+idx)%3!=0 gets terminal '.', line
+    # (doc_id+idx)%7==0 gets a banned token appended
+    def line(t, s):
+        idx = (s / 6).cast("bigint")
+        body = F.array_join(F.slice(t, s + 1, 6), " ")
+        inj = F.when((F.col("doc_id") + idx) % 7 == 0,
+                     F.lit(" javascript")).otherwise(F.lit("")) \
+            if idx_mod7_inject else F.lit("")
+        punct = F.when((F.col("doc_id") + idx) % 3 != 0,
+                       F.lit(".")).otherwise(F.lit(""))
+        return F.concat(body, inj, punct)
+
+    return TS.bind(
+        F.split(F.trim(F.col("text")), r"\s+"),
+        lambda t: F.transform(
+            F.sequence(F.lit(0), F.size(t) - 1, F.lit(6)),
+            lambda s: line(t, s)))
+
+
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -916,27 +938,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
     q["x51_winsorize"] = x51_winsorize
-
-    def _synth_lines(idx_mod7_inject: bool = True):
-        # deterministic multi-line text from the single-line corpus
-        # (the x34/x40 synthesize-then-operate pattern): 6-token lines;
-        # line (doc_id+idx)%3!=0 gets terminal '.', line
-        # (doc_id+idx)%7==0 gets a banned token appended
-        def line(t, s):
-            idx = (s / 6).cast("bigint")
-            body = F.array_join(F.slice(t, s + 1, 6), " ")
-            inj = F.when((F.col("doc_id") + idx) % 7 == 0,
-                         F.lit(" javascript")).otherwise(F.lit("")) \
-                if idx_mod7_inject else F.lit("")
-            punct = F.when((F.col("doc_id") + idx) % 3 != 0,
-                           F.lit(".")).otherwise(F.lit(""))
-            return F.concat(body, inj, punct)
-
-        return TS.bind(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.transform(
-                F.sequence(F.lit(0), F.size(t) - 1, F.lit(6)),
-                lambda s: line(t, s)))
 
     def x52_c4_line_filter(spark, sf):
         # C4-style line-level cleaning (min words ∧ terminal punct ∧

@@ -107,14 +107,9 @@ def main():
     if want("x52"):
         qs = entrymod.queries()
         docs = entrymod._t(spark, sf_dir, "documents").where(F.trim("text") != "")
-        from paperslicer_spark.functions import text_stats as TS
-        lines = TS.bind(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.transform(
-                F.sequence(F.lit(0), F.size(t) - 1, F.lit(6)),
-                lambda s: F.array_join(F.slice(t, s + 1, 6), " ")))
-        timed("x52_synth_lines_only", lambda: force(
-            docs.select("doc_id", F.array_join(lines, "\n").alias("text"))))
+        timed("x52_synth_lines_only", lambda: force(docs.select(
+            "doc_id",
+            F.array_join(entrymod._synth_lines(), "\n").alias("text"))))
         timed("x52_full", lambda: force(qs["x52_c4_line_filter"](spark, sf_dir)))
 
     if want("assembly"):

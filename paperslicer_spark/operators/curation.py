@@ -1080,7 +1080,6 @@ def epoch_mix(df: DataFrame, strata_col: str, token_expr,
 
 def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
                             dim: int = 4096, threshold: float = 0.0,
-                            weights: DataFrame | None = None,
                             salt: str = "w:") -> DataFrame:
     """fastText-style linear quality classifier over hashed
     bag-of-words features (the CCNet / DCLM "model-based filtering"
@@ -1090,16 +1089,12 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
     Per doc: each token hashes to one of ``dim`` feature buckets; the
     document score is the mean bucket weight, ``keep`` is a threshold
     on that mean. Weights are INTEGERS (derived ``md5(salt||bucket) %
-    2001 - 1000`` when no ``weights`` relation is given), so the
-    per-doc sum is exact bigint arithmetic and the only float op is
-    one final division — no cross-engine summation-order risk.
+    2001 - 1000``), so the per-doc sum is exact bigint arithmetic and
+    the only float op is one final division — no cross-engine
+    summation-order risk.
 
-    Scale shape: the default path is a ZERO-SHUFFLE map — one
-    ``F.aggregate`` pass over the token array computes the sum
-    in-row. A real trained model is a ``(bucket, w)`` relation passed
-    via ``weights`` (≤ ``dim`` rows → broadcast hash join on the
-    exploded tokens + one groupBy(doc) shuffle); the two paths are
-    equality-tested.
+    Scale shape: a ZERO-SHUFFLE map — one ``F.aggregate`` pass over
+    the token array computes the sum in-row.
     """
     # CPU-heavy tokenizing map: widen an under-split batch input to
     # session parallelism (gopher_quality precedent; no-op when
@@ -1115,29 +1110,14 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
                       F.lit(2001)) - F.lit(1000)
 
     n = F.size(F.col("_toks"))
-    if weights is None:
-        score = F.aggregate(
-            F.col("_toks"), F.lit(0).cast("bigint"),
-            lambda acc, t: acc + weight_of(bucket_of(t)))
-        scored = (
-            df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
-            .select(F.col(id_col).alias("doc"),
-                    n.alias("n_tokens"), score.alias("score_raw"))
-        )
-    else:
-        ex = (
-            df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
-            .select(F.col(id_col).alias("doc"),
-                    F.explode("_toks").alias("_t"))
-            .select("doc", bucket_of(F.col("_t")).alias("bucket"))
-        )
-        scored = (
-            ex.join(F.broadcast(weights), "bucket", "left")
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_tokens"),
-                 F.sum(F.coalesce(F.col("w"), F.lit(0)))
-                 .cast("bigint").alias("score_raw"))
-        )
+    score = F.aggregate(
+        F.col("_toks"), F.lit(0).cast("bigint"),
+        lambda acc, t: acc + weight_of(bucket_of(t)))
+    scored = (
+        df.withColumn("_toks", tokens(F.lower(F.col(text_col))))
+        .select(F.col(id_col).alias("doc"),
+                n.alias("n_tokens"), score.alias("score_raw"))
+    )
     mean_w = F.when(F.col("n_tokens") > 0,
                     F.round(F.col("score_raw") /
                             F.col("n_tokens"), 6))
@@ -1146,20 +1126,6 @@ def hashed_classifier_score(df: DataFrame, id_col: str, text_col: str,
         F.coalesce(F.col("score_raw") >
                    F.lit(float(threshold)) * F.col("n_tokens"),
                    F.lit(False)).alias("keep"))
-
-
-def classifier_weights(spark, dim: int = 4096,
-                       salt: str = "w:") -> DataFrame:
-    """Materialize :func:`hashed_classifier_score`'s derived weights
-    as the ``(bucket, w)`` relation a real trained model would be —
-    the broadcast-join serving path's input (equality-tested against
-    the zero-shuffle derived path)."""
-    b = F.col("id").cast("int")
-    w = F.pmod(md5_bigint(F.concat(F.lit(salt), b.cast("string")),
-                          hex_chars=7),
-               F.lit(2001)) - F.lit(1000)
-    return spark.range(dim).select(b.alias("bucket"),
-                                   w.cast("bigint").alias("w"))
 
 
 def dsir_weights(df: DataFrame, target: DataFrame, id_col: str,

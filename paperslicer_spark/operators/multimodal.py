@@ -1,14 +1,13 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads are carried as ``binary`` columns with a
-typed metadata struct; decode / feature-extract / resize / frame-
-sample run as Arrow-batched ``mapInPandas`` stages. Two codecs are
-real here:
+typed metadata struct; decode / feature-extract / frame-sample run
+as Arrow-batched ``mapInPandas`` stages. Two codecs are real here:
 
 - **PNG** (non-interlaced, 8-bit gray/gray+alpha/RGB/RGBA): a
   stdlib-``zlib`` decoder/encoder below (``decode_png`` /
   ``encode_png``) — genuine pixel payloads work end-to-end through
-  the filters/features/resize stages, no PIL required;
+  the filter and feature stages, no PIL required;
 - a deterministic **fake codec** for synthetic corpora:
   ``b"FAKEIMG" + width:uint16 + height:uint16 + fmt:1byte + pixels``
   with ``width*height`` seeded bytes.
@@ -78,7 +77,7 @@ def decode_png(payload: bytes):
     Handles non-interlaced 8-bit gray / gray+alpha / RGB / RGBA (the
     overwhelming majority of document-page renders). Color is reduced
     to luma ``(299 R + 587 G + 114 B) // 1000``; alpha is ignored —
-    the pixel consumers here (ink/blank stats, histograms, resize)
+    the pixel consumers here (ink/blank stats, histograms)
     are luminance-based. Returns ``(w, h, gray_uint8_flat)`` or raises
     ``ValueError``/``NotImplementedError`` on malformed/unsupported
     input.
@@ -201,7 +200,7 @@ def decode_image(payload: bytes, strict: bool = False):
     Fake-codec and real PNG payloads decode; other formats return
     ``None`` (or raise with ``strict=True`` — the PIL extension
     point). Every pixel consumer below goes through this, so real PNG
-    bytes flow through filters/features/resize unchanged."""
+    bytes flow through filters/features unchanged."""
     if payload and payload.startswith(_MAGIC):
         return decode_fake_image(payload)
     if payload and payload.startswith(_PNG_MAGIC):
@@ -420,48 +419,6 @@ def validate_table_regions(assets: DataFrame,
             v.close()
 
     return assets.mapInPandas(run, schema=assets.schema)
-
-
-def resize_assets(assets: DataFrame, max_side: int = 32) -> DataFrame:
-    """Resize stage: fake codec does nearest-neighbor downsample on its
-    pixel buffer; a real implementation swaps in PIL here."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            cols = {k: [] for k in ["asset_id", "conv_id", "kind",
-                                    "payload", "meta"]}
-            for aid, cid, kind, payload, meta in zip(
-                pdf["asset_id"], pdf["conv_id"], pdf["kind"],
-                pdf["payload"], pdf["meta"]
-            ):
-                dec = decode_image(bytes(payload))
-                if dec is None:
-                    continue
-                w, h, fmt, px = dec
-                scale = max(max(w, h) / max_side, 1.0)
-                nw, nh = max(int(w / scale), 1), max(int(h / scale), 1)
-                grid = px.reshape(h, w)[
-                    np.linspace(0, h - 1, nh).astype(int)][:,
-                    np.linspace(0, w - 1, nw).astype(int)]
-                if bytes(payload).startswith(_PNG_MAGIC):
-                    # real PNG in → real PNG out (stdlib encoder)
-                    out = encode_png(grid.astype("uint8"))
-                else:
-                    out = (_MAGIC
-                           + struct.pack("<HHB", nw, nh, _FMTS.index(fmt))
-                           + grid.astype("uint8").tobytes())
-                cols["asset_id"].append(int(aid))
-                cols["conv_id"].append(cid)
-                cols["kind"].append(kind)
-                cols["payload"].append(out)
-                cols["meta"].append({"width": nw, "height": nh,
-                                     "format": fmt, "n_bytes": len(out)})
-            yield pd.DataFrame(cols)
-
-    return assets.mapInPandas(run, schema=ASSET_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

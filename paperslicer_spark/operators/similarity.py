@@ -1,15 +1,15 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force cosine top-k as the exact baseline and a sign-LSH bucketed
-variant as the scale path. Dot products stay JVM-side via
+Brute-force cosine top-k as the exact baseline and IVF centroid
+probing as the scale path. Dot products stay JVM-side via
 ``aggregate``/``zip_with`` higher-order functions — no Python UDF.
 
 Scale path notes: brute force is a broadcast of the (small) query set
-against the corpus — linear scan, embarrassingly parallel. The LSH
-variant buckets by leading-dimension sign bits so each query only
-scans its bucket (probing neighbors of the bucket restores recall);
-at 100 TB you'd persist the bucketed table sorted by bucket for
-partition pruning.
+against the corpus — linear scan, embarrassingly parallel. IVF assigns
+every vector to its nearest centroid so each query only scans the
+lists it probes; the near-duplicate pair search blocks on
+leading-dimension sign bits instead. At 100 TB you'd persist the
+assigned table sorted by list for partition pruning.
 """
 
 from __future__ import annotations
@@ -256,38 +256,6 @@ def cosine_dup_pairs(corpus: DataFrame, threshold: float = 0.9,
         j.select("id_a", "id_b",
                  F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"))
         .where(F.col("cos") >= threshold)
-    )
-
-
-def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             bits: int = 8) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's bucket.
-
-    Recall < 1 by construction; the exactness/scale trade is the point.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        sign_lsh_bucket(F.col(vec_col), bits).alias("bucket"),
-    )
-    scored = (
-        F.broadcast(q).join(c, "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
     )
 
 

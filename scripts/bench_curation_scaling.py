@@ -259,17 +259,6 @@ def worker(cores: int) -> None:
             boilerplate_strip(withl_b, "doc_id", "text",
                               min_df=0.0, min_docs=5)))
         record("boiler", sec, n_docs)
-    if "bpe" in JOBS:
-        # round-5 op: memoized BPE encode (merge table trained once on
-        # a slice, training excluded — encode is the corpus-scale part)
-        from paperslicer_spark.operators.tokenizer import (
-            bpe_encode_batch, bpe_train)
-
-        merges = [(r["left"], r["right"]) for r in bpe_train(
-            docs.sample(0.01, seed=7), "text", n_merges=32).collect()]
-        sec = best_of(lambda: force(
-            bpe_encode_batch(docs, "text", merges)))
-        record("bpe", sec, n_docs)
     if "lsh_pairs" in JOBS:
         sec = best_of(lambda: force(
             DD.minhash_lsh_pairs(docs, "doc_id", "text")))
@@ -306,7 +295,7 @@ def orchestrate() -> None:
     for job in [j for j in ("quality", "lsh_pairs", "cluster", "c4", "repstats",
                             "pdedup", "decon", "substr", "bm25",
                             "bigram", "cooc", "contain", "dhash",
-                            "boiler", "bpe")
+                            "boiler")
                 if j in JOBS]:
         t_lo = results[lo][f"{job}_sec"]
         t_hi = results[hi][f"{job}_sec"]

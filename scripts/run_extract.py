@@ -18,6 +18,7 @@ Outputs under ``--output``:
   _manifest/          completed-bucket manifest (resume state)
   lineage/            per-partition lineage/metrics table
   quality/            corpus-quality gates (single row)
+  quality_csv/        per-document quality metrics (headered CSV)
 """
 
 from __future__ import annotations
@@ -83,11 +84,15 @@ def main() -> None:
     spans = extract_turn_spans(turns)
     partition_lineage(spans).write.mode("overwrite").parquet(
         os.path.join(args.output, "lineage"))
-    records = records_of(turns)
+    # both record reports read one parse: the quality write fills the
+    # cache (its dup-DOI branch would otherwise parse a second time)
+    # and the per-document CSV reuses it
+    records = records_of(turns).persist()
     corpus_quality(records).write.mode(
         "overwrite").parquet(os.path.join(args.output, "quality"))
     write_per_document_csv(per_document_metrics(records),
                            os.path.join(args.output, "quality_csv"))
+    records.unpersist()
     print("lineage + quality written")
     spark.stop()
 

@@ -1,9 +1,7 @@
-"""Sinks (K1-K3) and the stateful streaming assembler."""
+"""Record sinks (K1-K3)."""
 
 import glob
 import json
-
-from pyspark.sql import functions as F
 
 
 def test_write_records_jsonl_dedup(spark, tmp_path):
@@ -30,342 +28,3 @@ def test_write_records_jsonl_dedup(spark, tmp_path):
 
     write_small_export(df, str(tmp_path / "single"))
     assert len(glob.glob(str(tmp_path / "single") + "/part-*")) == 1
-
-
-def test_stateful_assembly_tombstone(spark, tmp_path):
-    """A straggler fragment arriving AFTER its conversation emitted must
-    be dropped by the tombstone — never re-seed state and emit a second
-    record for the same conv_id."""
-    import datetime
-
-    import pandas as pd
-
-    from paperslicer_spark.streaming.stateful_assemble import assemble_stream
-    from paperslicer_spark.streaming.stream_extract import stream_turns
-
-    src = tmp_path / "turns"
-    src.mkdir()
-    ts = datetime.datetime(2025, 1, 1)
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role",
-                                          "text", "tool", "ts"])
-        pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        pdf.to_parquet(src / name)
-
-    write_batch("b1.parquet", [
-        ("cx", 0, "tool",
-         "<teiHeader><fileDesc><titleStmt><title>X</title></titleStmt>"
-         "</fileDesc></teiHeader>", "gen", ts),
-        ("cx", 1, "tool", "<div><head>Results</head><p>r.</p></div>", "gen", ts),
-        ("cx", 2, "tool", "<back></back>", "gen", ts),
-    ])
-
-    q = (assemble_stream(stream_turns(spark, str(src))).writeStream
-         .format("memory").queryName("tombstone_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck2")).start())
-    q.processAllAvailable()
-    # straggler for the already-emitted conversation in a later batch
-    write_batch("b2.parquet",
-                [("cx", 3, "tool", "<div><p>late straggler</p></div>",
-                  "gen", ts)])
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("select * from tombstone_mem").collect()
-    assert [(r["conv_id"], r["status"]) for r in rows] == [("cx", "ok")]
-
-
-class _FakeState:
-    """Minimal GroupState double for driving _stateful_fn directly —
-    processing-time timeouts never settle under processAllAvailable()
-    in tests, so the expiry path is pinned at the function level."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self._v = None
-
-    def getCurrentProcessingTimeMs(self):
-        return 0
-
-    def setTimeoutDuration(self, ms):
-        pass
-
-
-def test_tombstone_expiry_straggler_duplicate(spark):
-    """Pin the documented residual risk: after the tombstone ages out,
-    an extremely late straggler RE-SEEDS state and eventually emits a
-    duplicate (timeout) row for an already-output conv_id — and
-    dedup_after is the one-call downstream remedy."""
-    import pandas as pd
-
-    from paperslicer_spark.streaming.stateful_assemble import (
-        _assemble_fn, dedup_after)
-
-    def batch(rows):
-        return [pd.DataFrame(rows, columns=["turn_idx", "text"])]
-
-    st = _FakeState()
-    # 1. full conversation arrives and emits ok
-    out1 = list(_assemble_fn(("cx",), batch([
-        (0, "<teiHeader><fileDesc><titleStmt><title>X</title></titleStmt>"
-            "</fileDesc></teiHeader>"),
-        (1, "<div><head>Results</head><p>r.</p></div>"),
-        (2, "<back></back>"),
-    ]), st))
-    assert len(out1) == 1 and out1[0]["status"][0] == "ok"
-    assert st.get == ([], [], True)  # tombstone
-    # 2. tombstone ages out silently (no re-emission)
-    st.hasTimedOut = True
-    assert list(_assemble_fn(("cx",), iter(()), st)) == []
-    assert not st.exists
-    st.hasTimedOut = False
-    # 3. post-expiry straggler re-seeds fresh state...
-    assert list(_assemble_fn(("cx",), batch(
-        [(3, "<div><p>late straggler</p></div>")]), st)) == []
-    assert st.exists and st.get[2] is False
-    # 4. ...and its own timeout emits the DUPLICATE timeout row
-    st.hasTimedOut = True
-    out2 = list(_assemble_fn(("cx",), iter(()), st))
-    assert len(out2) == 1 and out2[0]["status"][0] == "timeout"
-
-    # the one-call remedy: first-wins on conv_id, 'ok' preferred
-    dup = spark.createDataFrame(pd.concat([out1[0], out2[0]]))
-    kept = dedup_after(dup).collect()
-    assert [(r["conv_id"], r["status"]) for r in kept] == [("cx", "ok")]
-
-    # sections-shaped frame: winner group keeps ALL its rows
-    sec = spark.createDataFrame(
-        [("cy", "ok", "results", "r", True),
-         ("cy", "ok", "abstract", "a", True),
-         ("cy", "timeout", None, None, None),
-         ("cz", "timeout", None, None, None)],
-        "conv_id string, status string, section_label string, "
-        "clean_text string, is_canonical boolean")
-    kept2 = sorted((r["conv_id"], r["status"], r["section_label"])
-                   for r in dedup_after(sec).collect())
-    assert kept2 == [("cy", "ok", "abstract"), ("cy", "ok", "results"),
-                     ("cz", "timeout", None)]
-
-
-def test_stateful_oversize_guardrail():
-    """Streaming twin of the batch max_turns_per_conv guardrail: a
-    never-closing conversation stops accumulating state once over the
-    cap — one 'oversized' marker row, then a tombstone."""
-    import pandas as pd
-
-    from paperslicer_spark.streaming.stateful_assemble import (
-        _emit, _emit_sections, _stateful_fn)
-
-    def batch(rows):
-        return [pd.DataFrame(rows, columns=["turn_idx", "text"])]
-
-    fn = _stateful_fn(_emit, max_turns_per_conv=100)
-    st = _FakeState()
-    frags = [(i, f"<div><p>chunk {i}.</p></div>") for i in range(60)]
-    assert list(fn(("cb",), batch(frags), st)) == []
-    assert len(st.get[1]) == 60  # buffering below the cap
-    out = list(fn(("cb",), batch([(60 + i, t) for i, (_, t) in
-                                  enumerate(frags)]), st))
-    assert len(out) == 1
-    assert out[0]["status"][0] == "oversized"
-    assert out[0]["n_turns"][0] == 0
-    assert st.get == ([], [], True)  # tombstoned: state is bounded
-    # further fragments are dropped, nothing re-emitted
-    assert list(fn(("cb",), batch([(200, "<back></back>")]), st)) == []
-    assert st.get == ([], [], True)
-
-    # sections output: the marker row keeps accounting
-    fn2 = _stateful_fn(_emit_sections, max_turns_per_conv=10)
-    st2 = _FakeState()
-    out2 = list(fn2(("cs",), batch(
-        [(i, f"<div><p>c{i}.</p></div>") for i in range(11)]), st2))
-    assert len(out2) == 1
-    assert list(out2[0]["status"]) == ["oversized"]
-    assert out2[0]["section_label"][0] is None
-
-    # cap + same-batch <back: oversized still wins (batch parity —
-    # 'over' never resets), and the buffer is dropped mid-loop so
-    # within-batch accumulation is bounded as well
-    fn3 = _stateful_fn(_emit, max_turns_per_conv=5)
-    st3 = _FakeState()
-    rows = [(i, f"<div><p>c{i}.</p></div>") for i in range(8)]
-    rows.append((8, "<back></back>"))
-    out3 = list(fn3(("cc",), batch(rows), st3))
-    assert [o["status"][0] for o in out3] == ["oversized"]
-    assert st3.get == ([], [], True)
-
-
-def test_stateful_sections_stream(spark, corpus_path, tmp_path):
-    """output='sections': streamed long-form sections equal the batch
-    pipeline's (same parse settings: no merge, no review)."""
-    from paperslicer_spark.operators.assemble import assemble_documents
-    from paperslicer_spark.operators.extract import (
-        parse_documents, sections_long)
-    from paperslicer_spark.streaming.stateful_assemble import assemble_stream
-    from paperslicer_spark.streaming.stream_extract import stream_turns
-
-    stream = stream_turns(spark, corpus_path, max_files_per_trigger=1)
-    q = (assemble_stream(stream, output="sections").writeStream
-         .format("memory").queryName("sections_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck3")).start())
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        (r["conv_id"], r["section_label"], r["clean_text"], r["is_canonical"])
-        for r in spark.sql(
-            "select * from sections_mem where status = 'ok'").collect())
-    batch = sections_long(parse_documents(
-        assemble_documents(spark.read.parquet(corpus_path)),
-        merge_tables=False, review_mode=False))
-    want = sorted(map(tuple, batch.collect()))
-    assert got == want and len(got) > 0
-
-
-def test_stateful_assembly_stream(spark, corpus_path, tmp_path):
-    from paperslicer_spark.streaming.stateful_assemble import assemble_stream
-    from paperslicer_spark.streaming.stream_extract import stream_turns
-
-    stream = stream_turns(spark, corpus_path, max_files_per_trigger=1)
-    q = (assemble_stream(stream).writeStream.format("memory")
-         .queryName("assembled_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck")).start())
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("select * from assembled_mem").collect()
-    done = {r["conv_id"]: r for r in rows if r["status"] == "ok"}
-    # every conversation in the corpus closes with <back...> → all emit
-    assert len(done) == 40
-    # spot-check against the batch pipeline
-    from paperslicer_spark.operators.assemble import assemble_documents
-    from paperslicer_spark.operators.extract import parse_documents
-    batch = {r["conv_id"]: r for r in parse_documents(
-        assemble_documents(spark.read.parquet(corpus_path)),
-        merge_tables=False).collect()}
-    for cid, r in list(done.items())[:10]:
-        b = batch[cid]
-        assert r["title"] == b["title"]
-        assert r["n_references"] == len(b["references"])
-        assert r["n_sections"] == len(b["sections"]) + len(b["other_sections"])
-
-
-def test_streaming_dedup_redelivery(spark, tmp_path):
-    """At-least-once redelivery: the same turn rows written into two
-    micro-batch files collapse to one copy; genuinely distinct rows
-    (same key, different text) survive."""
-    import datetime as dt
-
-    from paperslicer_spark.streaming.stream_extract import (
-        stream_turns, streaming_dedup)
-
-    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        ("c1", 0, "user", "hello", "", ts),
-        ("c1", 1, "assistant", "world", "", ts),
-        ("c2", 0, "user", "other", "", ts),
-    ]
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite").parquet(str(src / "f1"))
-    # second delivery: two exact replays + one conflicting rewrite
-    rows2 = [
-        ("c1", 0, "user", "hello", "", ts),              # exact replay
-        ("c2", 0, "user", "other", "", ts),              # exact replay
-        ("c2", 0, "user", "other EDITED", "", ts),       # distinct text
-    ]
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode(
-        "overwrite").parquet(str(src / "f2"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    q = (streaming_dedup(stream).writeStream.format("memory")
-         .queryName("dedup_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_dd")).start())
-    q.processAllAvailable()
-    q.stop()
-    got = sorted((r["conv_id"], r["turn_idx"], r["text"])
-                 for r in spark.sql("select * from dedup_mem").collect())
-    assert got == [
-        ("c1", 0, "hello"),
-        ("c1", 1, "world"),
-        ("c2", 0, "other"),
-        ("c2", 0, "other EDITED"),
-    ]
-
-
-def test_streaming_curation_funnel_batch_parity(spark, tmp_path):
-    """One readStream plan chaining dedup → quality gate → stratified
-    sample (round-4 VERDICT item #6) equals the identical funnel run
-    in batch over the union of the micro-batch files."""
-    import datetime as dt
-
-    from paperslicer_spark.streaming.stream_extract import curation_funnel
-
-    ts = dt.datetime(2026, 1, 1, 12, 0, 0)
-    good = ("the quick brown fox jumps over the lazy dog while seven "
-            "wizards brew bright potions near an old stone bridge")
-    spam = "buy now " * 12                       # top-bigram degenerate
-    short = "too short"
-    rows1 = [(f"d{i}", "user" if i % 2 else "bot",
-              good + f" variant {i}", "", ts) for i in range(8)]
-    rows1 += [("d8", "user", spam, "", ts), ("d9", "bot", short, "", ts)]
-    # second file: exact replays (must collapse) + one fresh doc +
-    # one same-id different-text rewrite (must survive as its own row)
-    rows2 = [rows1[0], rows1[3],
-             ("d10", "user", good + " variant 10", "", ts),
-             ("d0", "user", good + " rewritten zero", "", ts)]
-    schema = ("conv_id string, role string, text string, tool string, "
-              "ts timestamp")
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(
-        str(src / "f1"))
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(
-        str(src / "f2"))
-
-    kw = dict(id_col="conv_id", text_col="text", strata_col="role",
-              rates={"user": 1.0, "bot": 0.5}, min_words=5,
-              min_mean_word_len=1.0, max_mean_word_len=20.0,
-              min_frac_unique=0.3, max_frac_top_bigram=0.5)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(src / "*")))
-    q = (curation_funnel(stream, **kw).writeStream.format("memory")
-         .queryName("funnel_mem").outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck_fn")).start())
-    q.processAllAvailable()
-    q.stop()
-    streamed = sorted(
-        (r["doc"], r["role"], r["word_count"]) for r in
-        spark.sql("select * from funnel_mem").collect())
-
-    batch_df = spark.read.parquet(str(src / "f1"), str(src / "f2"))
-    batch = sorted((r["doc"], r["role"], r["word_count"])
-                   for r in curation_funnel(batch_df, **kw).collect())
-    assert streamed == batch and len(streamed) > 4
-    docs = {d for d, _, _ in streamed}
-    assert "d8" not in docs and "d9" not in docs   # quality-gated
-    # replayed d0/d3 appear once; the d0 rewrite is a distinct row
-    assert sum(1 for d, _, _ in streamed if d == "d0") == 2
-    # the bot stratum is subsampled, users all kept
-    users_in = {f"d{i}" for i in range(8) if i % 2} | {"d10"}
-    assert users_in <= docs
