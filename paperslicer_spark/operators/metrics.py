@@ -220,7 +220,8 @@ def validation_scores(records: DataFrame) -> DataFrame:
 
 def partition_lineage(spans: DataFrame) -> DataFrame:
     """Per-partition lineage/metrics table (north_rule): what each task
-    contributed — enables checkpoint/resume audits."""
+    of the spans pass contributed, grouped by that pass's Spark
+    partitions (``spark_partition_id``), not by resume buckets."""
     return (
         spans.withColumn("part_id", F.spark_partition_id())
         .groupBy("part_id")

@@ -8,8 +8,12 @@ same contract is implemented with partitioned Parquet + a manifest:
   (``pmod(xxhash64(conv_id), n_buckets)``) — the unit of restart;
 - each bucket is written with ``partitionBy('bucket')`` dynamic
   overwrite, so re-running a bucket is idempotent;
-- a ``_manifest`` parquet records completed buckets + row counts +
-  per-bucket lineage; resume = anti-join pending buckets against it.
+- a ``_manifest`` parquet holds one ``bucket, status, n_rows,
+  n_buckets`` row per completed bucket, appended after the bucket's
+  write; ``n_rows`` is observed on the written DataFrame
+  (``DataFrame.observe``), not read back. Resume skips the buckets it
+  lists, and refuses a manifest written under another bucket count
+  (the same ids would name other conversations).
 
 Iceberg DDL for clusters that have the runtime jar::
 
@@ -44,7 +48,10 @@ from __future__ import annotations
 import os
 from typing import Callable, List
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+MANIFEST_SCHEMA = "bucket int, status string, n_rows long, n_buckets int"
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -56,14 +63,20 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> List[int]:
-    path = _manifest_path(out_dir)
+def completed_buckets(spark: SparkSession, out_dir: str,
+                      n_buckets: int) -> List[int]:
+    """Bucket ids the manifest lists as done. ``ValueError`` when one was
+    written under another bucket count: its id names other conversations."""
     try:
-        m = spark.read.parquet(path)
-    except Exception:
+        m = spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(out_dir))
+    except AnalysisException:  # no manifest yet
         return []
-    return [r["bucket"] for r in
-            m.where("status = 'done'").select("bucket").distinct().collect()]
+    rows = m.where("status = 'done'").select("bucket", "n_buckets").collect()
+    other = {r["n_buckets"] for r in rows} - {n_buckets}
+    if other:
+        raise ValueError(f"{out_dir}: manifest written with n_buckets in "
+                         f"{other}, cannot resume with n_buckets={n_buckets}")
+    return [r["bucket"] for r in rows]
 
 
 def run_with_resume(
@@ -75,6 +88,7 @@ def run_with_resume(
 ) -> dict:
     """Run ``transform`` bucket-by-bucket with resume.
 
+    ``turns`` may be any relation with a ``conv_id`` column.
     Each bucket's output lands under ``data/bucket=<b>/`` (dynamic
     partition overwrite → idempotent); the manifest row is appended
     only after the bucket's write succeeds, so a crash mid-bucket
@@ -84,7 +98,7 @@ def run_with_resume(
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     data_dir = os.path.join(out_dir, "data")
-    done = set(completed_buckets(spark, out_dir))
+    done = set(completed_buckets(spark, out_dir, n_buckets))
     bucketed = with_bucket(turns, n_buckets)
     ran, skipped, total_rows = [], [], 0
     for b in range(n_buckets):
@@ -93,18 +107,13 @@ def run_with_resume(
             continue
         part = bucketed.where(F.col("bucket") == b)
         out = transform(part.drop("bucket")).withColumn("bucket", F.lit(b))
-        out.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)
-        # count back from the bucket's own subdir: an empty bucket
-        # writes no files, and reading the root before any data exists
-        # would fail schema inference
-        try:
-            n = spark.read.parquet(
-                os.path.join(data_dir, f"bucket={b}")).count()
-        except Exception:
-            n = 0
+        rows = Observation()
+        out.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite").partitionBy("bucket").parquet(data_dir)
+        n = rows.get["n"]
         total_rows += n
         manifest_row = spark.createDataFrame(
-            [(b, "done", n)], "bucket int, status string, n_rows long")
+            [(b, "done", n, n_buckets)], MANIFEST_SCHEMA)
         manifest_row.write.mode("append").parquet(_manifest_path(out_dir))
         ran.append(b)
     return {"ran": ran, "skipped": skipped, "rows_written": total_rows,

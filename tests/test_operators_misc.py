@@ -182,6 +182,73 @@ def test_checkpoint_resume(spark, corpus_path, tmp_path):
     assert spark.read.parquet(out + "/data").count() == total
 
 
+def _sorted_rows(spark, path):
+    return sorted(map(tuple, spark.read.parquet(path).collect()), key=repr)
+
+
+def _manifest_files(out):
+    """Manifest parquet file → the bucket ids it holds."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    return {f: pq.read_table(f, columns=["bucket"]).column(0).to_pylist()
+            for f in glob.glob(os.path.join(out, "_manifest", "*.parquet"))}
+
+
+def test_checkpoint_rejects_other_bucket_count(spark, corpus_path, tmp_path):
+    """Bucket ids of a 2-bucket run name other conversations under 4
+    buckets: resuming must refuse before writing anything, not skip
+    buckets 0-1 and duplicate their rows."""
+    from paperslicer_spark.operators.spans import extract_turn_spans
+    from paperslicer_spark.plans.checkpoint import run_with_resume
+
+    out = str(tmp_path / "spans_out")
+    turns = spark.read.parquet(corpus_path)
+    run_with_resume(spark, turns, out, extract_turn_spans, n_buckets=2)
+    data, manifest = _sorted_rows(spark, out + "/data"), _manifest_files(out)
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_with_resume(spark, turns, out, extract_turn_spans, n_buckets=4)
+    assert _sorted_rows(spark, out + "/data") == data
+    assert _manifest_files(out) == manifest
+
+
+def test_checkpoint_half_committed_bucket(spark, corpus_path, tmp_path):
+    """Empty buckets commit ``n_rows`` 0; a bucket whose data landed but
+    whose manifest row did not (a crash between the two writes) is the
+    only one re-run, and the output is unchanged."""
+    import os
+
+    from paperslicer_spark.operators.spans import extract_turn_spans
+    from paperslicer_spark.plans.checkpoint import run_with_resume
+
+    turns = spark.read.parquet(corpus_path)
+    convs = sorted(r["conv_id"] for r in
+                   turns.select("conv_id").distinct().collect())[:5]
+    turns = turns.where(F.col("conv_id").isin(convs))
+    out = str(tmp_path / "spans_out")
+    s1 = run_with_resume(spark, turns, out, extract_turn_spans, n_buckets=8)
+    assert s1["ran"] == list(range(8))
+    data = spark.read.parquet(out + "/data")
+    per_bucket = {r["bucket"]: r["count"] for r in
+                  data.groupBy("bucket").count().collect()}
+    manifest = {r["bucket"]: r["n_rows"] for r in
+                spark.read.parquet(out + "/_manifest").collect()}
+    assert manifest == {b: per_bucket.get(b, 0) for b in range(8)}
+    assert 0 in manifest.values()  # 5 conversations over 8 buckets
+    assert s1["rows_written"] == data.count()
+
+    before = _sorted_rows(spark, out + "/data")
+    b = min(k for k, n in manifest.items() if n)
+    for f, buckets in _manifest_files(out).items():
+        if b in buckets:
+            os.remove(f)
+    s2 = run_with_resume(spark, turns, out, extract_turn_spans, n_buckets=8)
+    assert s2["ran"] == [b]
+    assert _sorted_rows(spark, out + "/data") == before
+
+
 def test_partition_lineage(spark, corpus_path):
     from paperslicer_spark.operators.metrics import partition_lineage
     from paperslicer_spark.operators.spans import extract_turn_spans

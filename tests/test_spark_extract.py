@@ -422,6 +422,50 @@ def test_sections_direct_equals_records_path(spark, turns):
     assert a == c
 
 
+def test_run_extract_cli_and_resume(spark, corpus_path, tmp_path):
+    """The extraction job end to end: data/ equals the sections
+    operator, the manifest counts it, the three reports cover the
+    corpus, and a second run resumes with nothing to do."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark.sql import functions as F
+
+    from paperslicer_spark.operators.extract import extract_sections_fused
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "extract")
+    cmd = [sys.executable, "scripts/run_extract.py", "--input", corpus_path,
+           "--output", out, "--buckets", "3"]
+    # a second JVM beside the test session's: keep its heap small
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    lines = []
+    for _ in range(2):
+        r = subprocess.run(cmd, capture_output=True, text=True, cwd=root,
+                           env=env)
+        assert r.returncode == 0, r.stderr[-2000:]
+        lines.append([ln for ln in r.stdout.splitlines()
+                      if ln.startswith("extraction:")][0])
+    assert "'ran': [0, 1, 2]" in lines[0]
+    assert "'ran': []" in lines[1]
+
+    turns = spark.read.parquet(corpus_path)
+    cols = ["conv_id", "section_label", "clean_text", "is_canonical"]
+    data = spark.read.parquet(out + "/data")
+    got = sorted(map(tuple, data.select(cols).collect()), key=repr)
+    want = sorted(map(tuple, extract_sections_fused(turns).select(cols)
+                      .collect()), key=repr)
+    assert got == want
+    manifest = spark.read.parquet(out + "/_manifest")
+    assert manifest.agg(F.sum("n_rows")).first()[0] == len(got)
+    assert spark.read.parquet(out + "/quality").first()["total_docs"] == N_DOCS
+    assert spark.read.csv(out + "/quality_csv", header=True).count() == N_DOCS
+    lineage = spark.read.parquet(out + "/lineage")
+    assert lineage.agg(F.sum("n_units")).first()[0] == \
+        extract_turn_spans(turns).count()
+
+
 def test_one_parse_node_per_entry_point(spark, turns):
     """Each entry point plans exactly ONE Python-UDF node, the core's
     MapInArrow (parse once per pass); the raw-turns shape adds exactly
